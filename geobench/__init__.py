@@ -1,0 +1,1 @@
+"""geobench: seeded end-to-end and per-layer benchmark (see README.md)."""
