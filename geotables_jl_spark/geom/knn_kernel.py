@@ -4,8 +4,8 @@ broadcast-right map round of ``knn_pairs``.
 Why Python here at all (the repo's rule is JVM-first): the per-row
 "score ~65 candidates, sort, slice k" step has no codegen-friendly Spark
 expression — higher-order functions (``transform``/``array_sort``) are
-CodegenFallback and measured 6.7–92 s per 4M rows on local[16]
-(``tools/profile_knn_micro.py``), 10–25× the budget. This kernel does
+CodegenFallback and measured 6.7–92 s per 4M rows on local[16],
+10–25× the budget. This kernel does
 the same work fully vectorized: the 10^12-row left stream ships ONLY
 (lid, lx, ly, cell) — 32 bytes/row — through Arrow, all candidate data
 lives in a numpy broadcast on each worker, and every batch is processed

@@ -30,17 +30,16 @@ correspondingly coarser level) next round. ``chord >= 2`` covers the
 whole sphere, so the loop degrades gracefully to brute force and is
 exact at any k without a special arm.
 
-Scale shape: with a broadcastable directory (``broadcast_right``) kNN
-runs as ONE map stage — the directory rides to workers as plain numpy
-and ``geom/s2_knn_kernel.score_batch_sphere`` executes the entire
-cell-ring expansion (cover probe, in-kernel certification, 3× chord
-escalation, brute-force tail) per Arrow batch; zero shuffles, zero
-driver rounds (the per-round DataFrame pipeline remains as
-``engine='rounds'``). In the shuffle arm (directory too big to
-broadcast) each round shuffles the cell equi-join once plus one lid
-window; rounds after the first touch only uncertified rows
-(empty-region points), a vanishing fraction under any realistic
-density.
+Scale shape: with a broadcastable directory (``broadcast_right``) and
+integral ids, kNN runs as ONE map stage — the directory rides to workers
+as plain numpy and ``geom/s2_knn_kernel.score_batch_sphere`` executes
+the entire cell-ring expansion (cover probe, in-kernel certification,
+3× chord escalation, brute-force tail) per Arrow batch; zero shuffles,
+zero driver rounds. Every other input (a directory too big to
+broadcast, or non-integral ids) takes the DataFrame rounds loop: each
+round runs the cell equi-join once plus one lid window; rounds after
+the first touch only uncertified rows (empty-region points), a
+vanishing fraction under any realistic density.
 """
 
 from __future__ import annotations
@@ -49,8 +48,7 @@ import math
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.geom import s2
@@ -110,13 +108,22 @@ def _tagged(df: DataFrame, tag: str) -> DataFrame:
     )
 
 
+def _cell_stage_io(side: DataFrame, tag: str) -> tuple[DataFrame, str]:
+    """(input, output schema) of an Arrow cell stage over a ``_tagged``
+    side: the id column keeps its own type (long, string, ...), so
+    non-integral ids ride through the rounds loop unchanged."""
+    idc, xc, yc, zc = tag + "id", tag + "x", tag + "y", tag + "z"
+    src = side.select(idc, xc, yc, zc)
+    id_type = src.schema[idc].dataType.simpleString()
+    return src, f"{idc} {id_type}, {xc} double, {yc} double, {zc} double, __cell long"
+
+
 def _cover_explode(side: DataFrame, chord: float, level: int, tag: str) -> DataFrame:
     """Arrow kernel: explode each point of a ``_tagged`` side into its
     cap-cover cells (radius ``chord``). This is the Python-touching
     stage — run it on the SMALL side (see module docstring)."""
-    idc, xc, yc, zc = tag + "id", tag + "x", tag + "y", tag + "z"
-    src = side.select(idc, xc, yc, zc)
-    schema = f"{idc} long, {xc} double, {yc} double, {zc} double, __cell long"
+    src, schema = _cell_stage_io(side, tag)
+    xc, yc, zc = tag + "x", tag + "y", tag + "z"
 
     def _iter(batches):
         for pdf in batches:
@@ -133,28 +140,22 @@ def _cover_explode(side: DataFrame, chord: float, level: int, tag: str) -> DataF
     return src.mapInPandas(_iter, schema=schema)
 
 
-def _cell_side(side: DataFrame, level: int, tag: str, engine: str = "arrow") -> DataFrame:
+def _cell_side(side: DataFrame, level: int, tag: str) -> DataFrame:
     """Single level-``level`` cell per point of a ``_tagged`` side — the
-    stage the 10^12-row side takes. ``engine='arrow'`` (default) runs
-    the vectorized numpy LUT kernel in one Arrow map stage (~6× the
-    throughput of the SQL twin, whose ``aggregate()`` Hilbert fold is
-    JVM-interpreted per row); ``engine='codegen'`` keeps the pure-SQL
-    expression (no Python worker anywhere — oracle replays and
-    restricted clusters). Both are bit-identical on any IEEE-754
+    stage the 10^12-row side takes. One vectorized numpy LUT kernel in
+    one Arrow map stage (~6× the throughput of the SQL twin
+    ``s2.with_s2_cell``, whose ``aggregate()`` Hilbert fold is
+    JVM-interpreted per row); the two are bit-identical on any IEEE-754
     platform (property-tested in tests/test_s2.py)."""
-    if engine == "codegen":
-        s = s2.with_s2_cell(side, level, out="__cell", xyz=(tag + "x", tag + "y", tag + "z"))
-        return s.where(F.col("__cell").isNotNull())
-    idc, xc, yc, zc = tag + "id", tag + "x", tag + "y", tag + "z"
-    src = side.select(idc, xc, yc, zc)
-    schema = f"{idc} long, {xc} double, {yc} double, {zc} double, __cell long"
+    src, schema = _cell_stage_io(side, tag)
+    xc, yc, zc = tag + "x", tag + "y", tag + "z"
 
     def _iter(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             x, y, z = (pdf[c].to_numpy() for c in (xc, yc, zc))
-            ok = (x != 0) | (y != 0) | (z != 0)  # codegen emits NULL here
+            ok = (x != 0) | (y != 0) | (z != 0)  # the SQL twin emits NULL here
             if not ok.all():
                 pdf = pdf.iloc[np.flatnonzero(ok)].reset_index(drop=True)
                 x, y, z = x[ok], y[ok], z[ok]
@@ -162,124 +163,6 @@ def _cell_side(side: DataFrame, level: int, tag: str, engine: str = "arrow") -> 
             yield pdf
 
     return src.mapInPandas(_iter, schema=schema)
-
-
-def _topk_stream(cand: DataFrame, k: int, cert2: float | None = None) -> DataFrame:
-    """Per-lid top-k by (chord2, rid) WITHOUT a shuffle — the broadcast
-    arm's replacement for ``row_number() over (partition by lid)``.
-
-    Correctness rests on a construction guarantee of the callers: on the
-    broadcast plan, candidate rows are lid-contiguous within each
-    partition (the stream side carries each lid's single cell row — or
-    its cover-explode run, emitted contiguously by the CSR kernel — and
-    the broadcast hash join emits each stream row's matches
-    consecutively; no exchange ever sits between — LEFT OUTER included).
-    A streaming Arrow kernel with cross-batch carry of the trailing run
-    then computes the exact top-k per lid: batch-local lexsort on
-    (run, chord2, rid) and a vectorized rank-within-run, never a per-row
-    Python loop. At web scale this turns the kNN round into a pure map
-    pipeline — scan → cell id → broadcast join → refine → top-k — with
-    no shuffle at all.
-
-    ``cert2`` switches on IN-KERNEL certification (the kNN ring-expansion
-    bookkeeping, shuffle-free): rows whose chord2 is null/NaN (the
-    left-outer join's no-candidate markers) don't count as candidates; a
-    run is *certified* when it has ≥ k candidates and its k-th candidate
-    lies within the covered radius (chord2 ≤ cert2). Certified runs emit
-    their top-k with ``cert=true``; uncertified runs emit ONE marker row
-    (rid=-1, chord2=NaN, rank=0, cert=false) carrying just the lid, so
-    the caller's escalation set is a tiny broadcastable column instead
-    of a join against the full top-k.
-    """
-    with_cert = cert2 is not None
-    schema = "lid long, rid long, chord2 double, rank integer" + (
-        ", cert boolean" if with_cert else ""
-    )
-
-    def _part(batches):
-        hold: list[pd.DataFrame] = []  # trailing (possibly open) run
-
-        def _emit(pdf):
-            lid = pdf["lid"].to_numpy()
-            c2 = np.array(pdf["chord2"].to_numpy(), dtype="float64", copy=True)
-            # Arrow hands a nullable long over as float64+NaN; an all-valid
-            # batch stays int64 (no 2^53 precision cliff on the ids)
-            rid = pdf["rid"].to_numpy()
-            n = len(lid)
-            run = np.zeros(n, dtype=np.int64)
-            run[1:] = lid[1:] != lid[:-1]
-            run = np.cumsum(run)
-            invalid = np.isnan(c2)
-            if invalid.any():
-                c2[invalid] = np.inf  # sort no-candidate markers last
-            order = np.lexsort((rid, c2, run))
-            run_s = run[order]
-            counts = np.bincount(run_s)
-            starts_r = np.cumsum(counts) - counts
-            starts = np.repeat(starts_r, counts)
-            rank = np.arange(n, dtype=np.int64) - starts
-            if not with_cert:
-                keep = order[rank < k]
-                return pd.DataFrame(
-                    {
-                        "lid": lid[keep],
-                        "rid": rid[keep].astype(np.int64, copy=False),
-                        "chord2": c2[keep],
-                        "rank": (rank[rank < k] + 1).astype(np.int32),
-                    }
-                )
-            nruns = len(counts)
-            # candidates per run (invalid rows sorted last never rank
-            # below a valid one, so rank-k validity ⇔ ≥k candidates)
-            kth_rows = np.flatnonzero(rank == k - 1)  # one per run with ≥k rows
-            cert_run = np.zeros(nruns, dtype=bool)
-            kth_c2 = c2[order[kth_rows]]
-            cert_run[run_s[kth_rows]] = np.isfinite(kth_c2) & (kth_c2 <= cert2)
-            row_cert = cert_run[run_s]
-            keep_m = (rank < k) & row_cert
-            keep = order[keep_m]
-            unc_first = order[starts_r[~cert_run]]  # one marker row per run
-            out = pd.DataFrame(
-                {
-                    "lid": np.concatenate([lid[keep], lid[unc_first]]),
-                    "rid": np.concatenate(
-                        [rid[keep], np.full(len(unc_first), -1, dtype=rid.dtype)]
-                    ).astype(np.int64, copy=False),
-                    "chord2": np.concatenate(
-                        [c2[keep], np.full(len(unc_first), np.nan)]
-                    ),
-                    "rank": np.concatenate(
-                        [rank[keep_m] + 1, np.zeros(len(unc_first), dtype=np.int64)]
-                    ).astype(np.int32),
-                    "cert": np.concatenate(
-                        [np.ones(keep_m.sum(), dtype=bool), np.zeros(len(unc_first), dtype=bool)]
-                    ),
-                }
-            )
-            return out
-
-        last_lid = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lid = pdf["lid"].to_numpy()
-            if hold and lid[0] != last_lid:
-                yield _emit(pd.concat(hold, ignore_index=True))
-                hold = []
-            # hold back the trailing run — it may continue next batch
-            cut = int(np.flatnonzero(lid != lid[-1])[-1]) + 1 if (lid != lid[-1]).any() else 0
-            if cut > 0:
-                closed = pdf.iloc[:cut]
-                if hold:
-                    closed = pd.concat([*hold, closed], ignore_index=True)
-                    hold = []
-                yield _emit(closed)
-            hold.append(pdf.iloc[cut:])
-            last_lid = lid[-1]
-        if hold:
-            yield _emit(pd.concat(hold, ignore_index=True))
-
-    return cand.select("lid", "rid", "chord2").mapInPandas(_part, schema=schema)
 
 
 def _expand_mode(expand: str | None, broadcast_right: bool | None) -> str:
@@ -360,8 +243,7 @@ def _knn_kernel_arm(left: DataFrame, right: DataFrame, k: int, chord0: float) ->
     stream ships only (lid, x, y, z); output fans out to pair rows via
     codegen posexplode. Zero shuffles, zero driver rounds, zero per-round
     broadcast builds — the job is a single narrow map over the page scan
-    (the DataFrame rounds arm measured 8 candidate-rows of Arrow traffic
-    per directory hit; this ships 32 B/page)."""
+    that ships 32 B/page through Arrow."""
     from pyspark.sql import types as T
 
     from geotables_jl_spark.geom.s2_knn_kernel import SphereIndex, score_batch_sphere
@@ -423,6 +305,13 @@ def _knn_kernel_arm(left: DataFrame, right: DataFrame, k: int, chord0: float) ->
     )
 
 
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """Top-k per lid by (chord2, rid): one partitioned window (one
+    shuffle on lid)."""
+    w = Window.partitionBy("lid").orderBy(F.col("chord2").asc(), F.col("rid").asc())
+    return cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
 def s2_knn_join(
     left: DataFrame,
     right: DataFrame,
@@ -433,7 +322,6 @@ def s2_knn_join(
     broadcast_right: bool | None = None,
     expand: str | None = None,
     n_left: int | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Exact k nearest right points per left point by chord distance,
     ties broken by ascending rid — via S2 cell-ring expansion: cover the
@@ -441,39 +329,37 @@ def s2_knn_join(
     covered radius, escalate the rest 3×. Returns (lid, rid, chord2,
     rank), rank 1..k.
 
+    ``broadcast_right`` with integral lid/rid runs the one-map-stage
+    kernel (``_knn_kernel_arm``); anything else runs the rounds loop
+    below (see module docstring).
+
     ``n_right`` sizes the initial radius (uniform-density estimate
     ``theta0 ~ 2*sqrt(k/n)``); pass it to avoid the planning-time
     ``count()`` (the stats-injection escape hatch, same contract as the
     planar kNN's planning aggregates).
 
-    ``expand`` picks the cover-explode side per the module docstring;
-    the default explodes the right when ``broadcast_right`` (web scale:
-    10^12 query pages stay in codegen, the directory pays the ~10-25×
-    cover and is still broadcastable), else the left (small query side
-    against a huge shuffled corpus)."""
+    ``expand`` picks the cover-explode side of the rounds loop per the
+    module docstring; the default explodes the right when
+    ``broadcast_right`` (the directory pays the ~10-25× cover and is
+    still broadcastable), else the left (small query side against a huge
+    shuffled corpus)."""
     if chord0 is None:
         if n_right is None:
             n_right = right.count()
         theta0 = 2.0 * math.sqrt(max(k, 1) / max(n_right, 1))
         chord0 = min(2.0, 1.5 * theta0)
-    if engine not in ("auto", "kernel", "rounds"):
-        raise ValueError(f"engine must be auto|kernel|rounds, got {engine!r}")
-    if engine == "kernel" and not broadcast_right:
-        raise ValueError("engine='kernel' requires broadcast_right=True (resident directory)")
-    if engine != "rounds" and broadcast_right:
+    if broadcast_right:
         from pyspark.sql import types as T
 
-        id_ok = isinstance(
-            left.schema["lid"].dataType, (T.LongType, T.IntegerType)
-        ) and isinstance(right.schema["rid"].dataType, (T.LongType, T.IntegerType))
-        if id_ok:
+        integral = (T.LongType, T.IntegerType)
+        if isinstance(left.schema["lid"].dataType, integral) and isinstance(
+            right.schema["rid"].dataType, integral
+        ):
             # in-kernel arm: same cell-ring expansion, resident directory,
             # one map stage (geom/s2_knn_kernel.py) — bit-identical to the
-            # rounds arm (chord² refine, (chord2, rid) ties), tested in
+            # rounds loop (chord² refine, (chord2, rid) ties), tested in
             # tests/test_s2_kernel.py
             return _knn_kernel_arm(left, right, k, float(chord0))
-        if engine == "kernel":
-            raise ValueError("engine='kernel' needs integral lid/rid columns")
     mode = _expand_mode(expand, broadcast_right)
     right_t = _tagged(right, "r")
     remaining = _tagged(left, "l")
@@ -482,53 +368,11 @@ def s2_knn_join(
     # exact remaining-row bookkeeping (cert lids are distinct and a
     # subset of remaining) replaces per-round isEmpty()/anti-join
     # actions; ``n_left`` is the stats-injection escape for the one
-    # up-front count (shuffle arm only — the broadcast arm's in-kernel
-    # certification never needs a left count)
+    # up-front count
     n_remaining = n_left
-    for rnd in range(max_rounds):
+    for _ in range(max_rounds):
         lvl = s2.s2_level_for_chord(chord, 6.0)
         l, r = _cell_pair(remaining, right_t, chord, lvl, mode)
-        full_sphere = chord >= 2.0
-        if broadcast_right and not full_sphere:
-            # Broadcast arm: the ENTIRE round — candidates, top-k, AND
-            # the certify/escalate bookkeeping — is shuffle-free. The
-            # chord² refine rides in the join condition of a LEFT OUTER
-            # broadcast join, so a left row with no candidate in the
-            # covered radius surfaces as one null row instead of
-            # vanishing; the streaming top-k kernel certifies each run
-            # in place (k-th candidate within the covered radius) and
-            # collapses uncertified runs to one marker row. The
-            # escalation set is then a tiny lid column — broadcastable —
-            # so ``remaining`` is a broadcast semi-join against the left
-            # scan, never an anti-join shuffled by the full top-k. (The
-            # r3.0 bookkeeping shuffled twice per round: a groupBy-kth
-            # over k·|left| rows and, whenever even one row escalated, a
-            # lid-hash join of the full top-k against the certified set
-            # — at 10M rows those two shuffles were the entire gap
-            # between 0.80 and ~0.9 raw scaling efficiency.)
-            rr = F.broadcast(r)
-            c2 = _chord2("l", "r")
-            cond = (l["__cell"] == rr["__cell"]) & (c2 <= F.lit(chord * chord))
-            cand = l.join(rr, on=cond, how="left").select(
-                "lid", "rid", c2.alias("chord2")
-            )
-            # ONE expensive pass per round: materialize the round's
-            # certified top-k + uncertified markers (executor-local
-            # blocks) so the n_unc count, the escalation lids, and the
-            # final union read a local scan instead of recomputing the
-            # explode→join→top-k chain (measured 3× the round cost
-            # without)
-            topk = _topk_stream(cand, k, cert2=chord * chord).localCheckpoint(eager=True)
-            unc = topk.where(~F.col("cert"))
-            n_unc = unc.count()  # cheap scan of the checkpointed top-k
-            results.append(topk.where(F.col("cert")).drop("cert"))
-            if n_unc == 0:
-                break
-            remaining = remaining.join(
-                F.broadcast(unc.select("lid")), on="lid", how="semi"
-            )
-            chord = min(2.0, chord * 3.0)
-            continue
         rr = F.broadcast(r) if broadcast_right else r
         cand = l.join(rr, on="__cell", how="inner").select(
             "lid", "rid", _chord2("l", "r").alias("chord2")
@@ -543,19 +387,9 @@ def s2_knn_join(
         # drop an exact candidate.
         if chord < 2.0:
             cand = cand.where(F.col("chord2") <= F.lit(chord * chord))
-        if broadcast_right:
-            # full-sphere broadcast round: plain exact top-k, everything
-            # certifies by construction
-            topk = _topk_stream(cand, k)
-        else:
-            # shuffle arm: top-k per lid (partitioned window — one
-            # shuffle on lid; the cell equi-join already shuffled, so
-            # contiguity does not hold here)
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("lid").orderBy(F.col("chord2").asc(), F.col("rid").asc())
-            topk = cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-        if full_sphere:
+        topk = _topk(cand, k)
+        if chord >= 2.0:
+            # full-sphere round: everything certifies by construction
             results.append(topk)
             break
         # ONE expensive pass per round: materialize the round's top-k
@@ -592,20 +426,13 @@ def s2_knn_join(
         chord = min(2.0, chord * 3.0)
     else:
         # max_rounds exhausted without reaching the whole sphere: one
-        # exact final pass at chord=2 (full cover — always certified),
-        # same broadcast/top-k arms as the loop rounds
+        # exact final pass at chord=2 (full cover — always certified)
         l, r = _cell_pair(remaining, right_t, 2.0, 0, mode)
         rr = F.broadcast(r) if broadcast_right else r
         cand = l.join(rr, on="__cell", how="inner").select(
             "lid", "rid", _chord2("l", "r").alias("chord2")
         )
-        if broadcast_right:
-            results.append(_topk_stream(cand, k))
-        else:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("lid").orderBy(F.col("chord2").asc(), F.col("rid").asc())
-            results.append(cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k))
+        results.append(_topk(cand, k))
     out = results[0]
     for df in results[1:]:
         out = out.unionByName(df)

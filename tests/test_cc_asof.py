@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.operators.asof import asof_join
+from geotables_jl_spark.operators import dedup as DD
 from geotables_jl_spark.operators.dedup import connected_components, dedup_clusters
 
 
@@ -31,12 +32,20 @@ def _uf_components(edges):
     return {x: find(x) for x in parent}
 
 
-@pytest.mark.parametrize("sgm", [1_000_000, 0], ids=["fastpath", "distributed"])
-def test_cc_chain_and_islands(spark, sgm):
+@pytest.mark.parametrize(
+    "sgm", [1_000_000, 0, 44, 43],
+    ids=["fastpath", "distributed", "fastpath_at_bound", "distributed_above_bound"],
+)
+def test_cc_chain_and_islands(spark, sgm, monkeypatch):
     # a 40-node chain (worst case for plain label propagation: needs
     # pointer jumping to converge in O(log n)), two islands, dup/reversed
     # edges and a self-loop; sgm=0 forces the distributed loop, the
-    # default takes the driver union-find fast path
+    # default takes the driver union-find fast path. The fixture has 44
+    # directed non-self edges, so sgm=44 is the largest bound that still
+    # takes union-find and sgm=43 the smallest that takes the loop.
+    uf_calls = []
+    real_uf = DD._union_find
+    monkeypatch.setattr(DD, "_union_find", lambda e: uf_calls.append(1) or real_uf(e))
     edges = [(i, i + 1) for i in range(100, 140)]
     edges += [(7, 3), (3, 9), (50, 51), (51, 50), (60, 60)]
     df = spark.createDataFrame(edges, "id_a: long, id_b: long")
@@ -46,6 +55,7 @@ def test_cc_chain_and_islands(spark, sgm):
     }
     want = _uf_components([(u, v) for u, v in edges if u != v])
     assert got == want
+    assert bool(uf_calls) == (sgm >= 44), (sgm, uf_calls)
     # chain collapses to its min node
     assert got[139] == 100 and got[9] == 3
 

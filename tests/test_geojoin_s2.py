@@ -197,86 +197,29 @@ def test_knn_max_rounds_exhausted_fallback(sphere_dfs):
             assert (g == exp[lid]).all(), (bc, lid)
 
 
-def test_topk_stream_batch_boundaries(spark):
-    """The no-shuffle top-k kernel must be exact when a lid's candidate
-    run spans Arrow batch boundaries: force 7-row batches over runs of
-    varying length (1..13, some > k, some < k, duplicate chord2 ties)."""
-    rng = np.random.default_rng(11)
-    rows = []
-    for lid in range(40):
-        m = 1 + (lid * 7) % 13
-        c2 = np.round(rng.uniform(0, 1, m), 2)  # coarse → real ties
-        for j in range(m):
-            rows.append((lid, 1000 + j, float(c2[j])))
-    pdf = pd.DataFrame(rows, columns=["lid", "rid", "chord2"])
-    from geotables_jl_spark.operators.geojoin_s2 import _topk_stream
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        # single partition → one python worker sees every boundary
-        cand = spark.createDataFrame(pdf).coalesce(1)
-        got = _topk_stream(cand, 4).toPandas().sort_values(["lid", "rank"])
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    exp = []
-    for lid, grp in pdf.groupby("lid"):
-        g = grp.sort_values(["chord2", "rid"]).head(4)
-        for r, (_, row) in enumerate(g.iterrows(), 1):
-            exp.append((lid, row["rid"], row["chord2"], r))
-    expdf = pd.DataFrame(exp, columns=["lid", "rid", "chord2", "rank"])
-    assert len(got) == len(expdf)
-    for c in ("lid", "rid", "rank"):
-        assert (got[c].to_numpy() == expdf[c].to_numpy()).all(), c
-    assert (got["chord2"].to_numpy() == expdf["chord2"].to_numpy()).all()
-
-
-def test_topk_stream_cert_batch_boundaries(spark):
-    """The in-kernel certification path (cert2=) across 7-row Arrow
-    batch boundaries: certified runs emit top-k with cert=true; runs
-    with < k candidates, k-th beyond the bound, or a single null-rid
-    marker (the left-outer no-candidate row) collapse to one rank-0
-    marker with cert=false."""
-    rng = np.random.default_rng(13)
-    rows = []
-    for lid in range(40):
-        m = (lid * 7) % 13  # 0 → no-candidate marker run
-        if m == 0:
-            rows.append((lid, None, None))
-            continue
-        c2 = np.round(rng.uniform(0, 1, m), 2)
-        for j in range(m):
-            rows.append((lid, 1000 + j, float(c2[j])))
-    pdf = pd.DataFrame(rows, columns=["lid", "rid", "chord2"])
-    from geotables_jl_spark.operators.geojoin_s2 import _topk_stream
-
-    k, cert2 = 4, 0.5
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        cand = spark.createDataFrame(
-            pdf.astype({"rid": "Int64"}), schema="lid long, rid long, chord2 double"
-        ).coalesce(1)
-        got = _topk_stream(cand, k, cert2=cert2).toPandas().sort_values(["lid", "rank"])
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    for lid, grp in pdf.groupby("lid"):
-        g = got[got["lid"] == lid]
-        valid = grp.dropna(subset=["rid"]).sort_values(["chord2", "rid"])
-        certified = len(valid) >= k and valid["chord2"].iloc[k - 1] <= cert2
-        if certified:
-            top = valid.head(k)
-            assert g["cert"].all() and len(g) == k, lid
-            assert (g.sort_values("rank")["rid"].to_numpy() == top["rid"].to_numpy()).all(), lid
-        else:
-            assert len(g) == 1 and not g["cert"].iloc[0], lid
-            assert g["rank"].iloc[0] == 0 and g["rid"].iloc[0] == -1, lid
+def test_knn_string_ids_broadcast_matches_bruteforce(spark, sphere_dfs):
+    """String lid/rid with broadcast_right=True: the one regime the
+    in-kernel arm cannot take (it needs integral ids), so the rounds
+    loop runs against a broadcast directory. A small chord0 forces
+    escalation rounds; ranks must match numpy brute force, ties by
+    ascending rid string (zero-padded, so numeric order = string order)."""
+    L, R, _, _ = sphere_dfs
+    ldf = spark.createDataFrame(pd.DataFrame(
+        {"lid": [f"q{i:03d}" for i in range(len(L))], "x": L[:, 0], "y": L[:, 1], "z": L[:, 2]}
+    ))
+    rdf = spark.createDataFrame(pd.DataFrame(
+        {"rid": [f"r{i:04d}" for i in range(len(R))], "x": R[:, 0], "y": R[:, 1], "z": R[:, 2]}
+    ))
+    lp = s2_point_prep(ldf, "lid", xyz=("x", "y", "z"))
+    rp = s2_point_prep(rdf, "rid", xyz=("x", "y", "z"))
+    got = s2_knn_join(lp, rp, 3, chord0=0.03, broadcast_right=True).toPandas()
+    D2 = ((L[:, None, :] - R[None, :, :]) ** 2).sum(-1)
+    exp = np.argsort(D2, axis=1, kind="stable")[:, :3]
+    assert len(got) == len(L) * 3
+    for i in range(len(L)):
+        g = got[got["lid"] == f"q{i:03d}"].sort_values("rank")
+        assert list(g["rid"]) == [f"r{j:04d}" for j in exp[i]], i
+        assert list(g["rank"]) == [1, 2, 3], i
 
 
 def test_knn_duplicate_distance_ties(spark):

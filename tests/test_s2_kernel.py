@@ -1,5 +1,5 @@
 """Exactness tests for the in-kernel S2 kNN arm (geom/s2_knn_kernel.py):
-against a numpy brute-force oracle, against the DataFrame rounds arm,
+against a numpy brute-force oracle, against the DataFrame rounds loop,
 and on adversarial shapes — identical positions (chord2==0 ties),
 lattice ties at the k-th boundary, empty-region points that must
 escalate or brute-force, and tiny directories (n2 < k)."""
@@ -9,7 +9,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from geotables_jl_spark.geom.s2_knn_kernel import SphereIndex, score_batch_sphere
@@ -95,8 +94,9 @@ def test_kernel_small_directory():
 
 
 def test_kernel_arm_matches_rounds_arm(spark):
-    """End-to-end: s2_knn_join kernel arm vs DataFrame rounds arm on the
-    driver fixture shapes — identical (lid, rid, chord2, rank) sets."""
+    """End-to-end: s2_knn_join kernel arm (broadcast_right=True) vs the
+    shuffle rounds loop (broadcast_right=None) on the driver fixture
+    shapes — identical (lid, rid, chord2, rank) sets."""
     n_l, n_r = 80, 400
     left = spark.range(n_l).select(F.col("id").alias("lid"))
     k = F.col("lid")
@@ -115,8 +115,8 @@ def test_kernel_arm_matches_rounds_arm(spark):
     )
     rprep = s2_point_prep(right, "rid", xyz=("px", "py", "pz"))
 
-    kern = s2_knn_join(lprep, rprep, 5, n_right=n_r, broadcast_right=True, engine="kernel")
-    rnds = s2_knn_join(lprep, rprep, 5, n_right=n_r, broadcast_right=True, engine="rounds")
+    kern = s2_knn_join(lprep, rprep, 5, n_right=n_r, broadcast_right=True)
+    rnds = s2_knn_join(lprep, rprep, 5, n_right=n_r, broadcast_right=None)
     a = sorted(map(tuple, kern.select("lid", "rid", "chord2", "rank").collect()))
     b = sorted(map(tuple, rnds.select("lid", "rid", "chord2", "rank").collect()))
     assert a == b
@@ -171,14 +171,6 @@ def test_kernel_property_sweep(cfg):
         rid, pts[:, 0].copy(), pts[:, 1].copy(), pts[:, 2].copy(),
         k=k, chord0=chord0,
     )
-
-
-def test_kernel_engine_requires_broadcast(spark):
-    left = spark.range(3).select(F.col("id").alias("lid"),
-                                 F.lit(1.0).alias("px"), F.lit(0.0).alias("py"), F.lit(0.0).alias("pz"))
-    lp = s2_point_prep(left, "lid", xyz=("px", "py", "pz"))
-    with pytest.raises(ValueError, match="broadcast_right"):
-        s2_knn_join(lp, lp.withColumnRenamed("lid", "rid"), 1, n_right=3, engine="kernel")
 
 
 def test_cover_index_cache_keyed_by_token():
